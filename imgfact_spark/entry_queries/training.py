@@ -1087,7 +1087,8 @@ def d_semantic_dedup(spark, sf_dir):
     """SemDeDup-style semantic dedup (Abbas et al. 2023): spherical-k-means
     cells bound the pair search; a row drops iff a τ-similar smaller-id
     neighbor shares its cell.  ``deterministic=True, method='column'`` so
-    the trained centroids, cell assignments, cosines and drops are all
+    the centroids (driver-trained with fold kernels on the md5-key sample,
+    here the whole corpus), cell assignments, cosines and drops are all
     bitwise-replicable in the DuckDB oracle (centroid literals, like
     s_ivf_topk).  The same 30 planted affine near-copies as
     d_cosine_neardup guarantee the green row certifies real drops."""
@@ -1178,8 +1179,8 @@ def s_quantize_embeddings(spark, sf_dir):
 def _ivf_oracle_sql() -> str:
     """Oracle for s_ivf_topk: the spherical-k-means centroids are trained
     by :func:`ivf_train_centroids_numpy` — an exact numpy replica of the
-    query's ``ivf_train_centroids(deterministic=True)`` (md5 init,
-    sequential-fold dots, sorted sequential-fold means) — then embedded as
+    query's ``ivf_train_centroids(deterministic=True)`` (md5-key sample and
+    init, sequential-fold dots, sorted sequential-fold means) — then embedded as
     double literals.  Assignment / nprobe probing are replicated with
     ``list_sort`` over (−dot, index) structs, the DuckDB twin of the
     query's JVM sort_array ranking; rerank mirrors the s_lsh_topk oracle.
@@ -1239,10 +1240,11 @@ def s_ivf_topk(spark, sf_dir):
     """IVF approximate top-k (spherical k-means coarse quantizer + nprobe
     cell probing) — the second ANN scale path next to LSH.  The driver
     query runs ``method='column', deterministic=True``: sequential JVM fold
-    dots + order-independent sorted-fold training means, so the trained
-    centroids are bitwise-replicable in numpy and injectable into the
-    DuckDB oracle as literals (was rows-only in rounds 1-2).  The BLAS
-    pandas path's recall and determinism stay pinned by
+    dots, and the driver trains on the seeded md5-key sample (the whole
+    500-row corpus here, under the element bound) with fold kernels, so
+    the trained centroids are bitwise-replicable in numpy and injectable
+    into the DuckDB oracle as literals (was rows-only in rounds 1-2).  The
+    BLAS pandas path's recall and determinism stay pinned by
     tests/test_similarity.py::test_ivf_*."""
     from imgfact_spark.operators.similarity import ivf_topk
 

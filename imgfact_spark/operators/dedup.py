@@ -73,8 +73,10 @@ def _sliding_concat(toks: Column, n: int, num) -> Column:
     Value-identical to the transform form: element j-1 joins
     toks[j..j+n-1]; slices truncate at the array end, zip_with pads the
     tail with NULLs, and concat_ws skips NULLs — exactly the
-    shorter-than-n tail grams the slice form produced.  ``num`` is the
-    gram count (Column, >= 1)."""
+    shorter-than-n tail grams the slice form produced.  NULL ``toks``
+    read as ``[""]`` — the slice form's concat_ws of a NULL slice.
+    ``num`` is the gram count (Column, >= 1)."""
+    toks = F.coalesce(toks, F.array(F.lit("")))
     acc = F.slice(toks, 1, num)
     for i in range(1, n):
         acc = F.zip_with(

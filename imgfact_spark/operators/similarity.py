@@ -6,8 +6,9 @@
   * lsh_topk — random-hyperplane LSH bucketing: queries only meet corpus
     vectors sharing a signature bucket (multi-probe via several tables).
     The 100 TB path: shuffle cost ∝ bucket collisions, not |corpus|×|queries|.
-  * ivf_topk — IVF coarse quantizer (spherical k-means trained map-reduce
-    style) + nprobe cell probing — the second ANN scale path (FAISS shape).
+  * ivf_topk — IVF coarse quantizer (spherical k-means trained on the
+    driver over a seeded, element-bounded md5-key sample) + distributed
+    nprobe cell probing — the second ANN scale path (FAISS shape).
   * cosine_neardup_pairs — embedding near-duplicate pairs via the same LSH
     tables + exact cosine verification.
 
@@ -34,6 +35,11 @@ from imgfact_spark.operators.util import ensure_parallelism, snapshot
 # a 64-float vector ≈ 110 MB serialized — the upper end of what a healthy
 # executor broadcast should carry.
 DEFAULT_MAX_BROADCAST_QUERIES = 200_000
+
+# IVF training moves at most this many vector elements to the driver: the
+# sample is the MAX_TRAIN_ELEMS // dim rows with the smallest md5(seed, id)
+# keys.  200k × 64 doubles ≈ 100 MB at any vector width.
+MAX_TRAIN_ELEMS = 200_000 * 64
 
 
 def _query_side(df: DataFrame, n_queries: int, limit: int) -> DataFrame:
@@ -299,6 +305,26 @@ def lsh_topk(
     )
 
 
+def _train_sample(
+    corpus: DataFrame, dim: int, id_col: str, vec_col: str, seed: int
+) -> pd.DataFrame:
+    """The IVF training sample, in ONE Spark job: the ``MAX_TRAIN_ELEMS //
+    dim`` rows with the smallest ``md5(seed ‖ id)`` keys, ordered by
+    (key, id), moved to the driver through Arrow (a row-based collect of
+    150k array rows measured ~30 s of driver deserialization against ~1 s
+    for Arrow).  Seeded and independent
+    of partitioning; the key is the same string hashlib or DuckDB hashes,
+    so every engine picks the same sample.  Returns (id, vec) rows."""
+    key = F.md5(F.concat_ws("\x1f", F.lit(str(seed)), F.col(id_col).cast("string")))
+    return (
+        corpus.select(id_col, vec_col, key.alias("_k"))
+        .orderBy("_k", id_col)
+        .limit(MAX_TRAIN_ELEMS // dim)
+        .select(id_col, vec_col)
+        .toPandas()
+    )
+
+
 def ivf_train_centroids(
     corpus: DataFrame,
     dim: int,
@@ -308,161 +334,32 @@ def ivf_train_centroids(
     vec_col: str = "embedding",
     seed: int = 42,
     deterministic: bool = False,
-    prepared: bool = False,
-    max_driver_train_rows: int = 200_000,
 ) -> np.ndarray:
     """Spherical k-means coarse quantizer for IVF (the second ANN scale
-    path next to LSH; FAISS-style IVF over a DataFrame).
+    path next to LSH; FAISS-style IVF over a DataFrame).  Returns the
+    (n_cells, dim) L2-normalized centroid matrix.
 
-    ``prepared=True``: the caller passes an already-materialized
-    (id, vec) projection (ivf_topk / semantic_dedup share ONE snapshot
-    across init scan, Lloyd iterations and final cell assignment) — skip
-    the internal projection + snapshot.
+    The driver trains on a seeded, element-bounded sample
+    (:func:`_train_sample`): at most ``MAX_TRAIN_ELEMS`` vector
+    elements reach it at any ``dim``, in one Spark job, and no job runs
+    inside the Lloyd loop.  A corpus under the bound is trained in full;
+    above it the centroids come from the sample, as FAISS trains its
+    coarse quantizer.  Init = the first ``n_cells`` sample rows (tiny
+    corpora degrade to fewer cells); each iteration assigns by max dot
+    and recentres on the normalized member mean; empty cells keep their
+    centroid.
 
-    Fast mode trains DRIVER-SIDE when the corpus fits
-    ``max_driver_train_rows`` (same 200k × 64-float ≈ 110 MB bound as the
-    broadcast-small query contract): coarse-quantizer training is the one
-    stage whose input is routinely sample-sized — FAISS trains IVF on a
-    driver/GPU sample even for billion-vector indexes — and the
-    distributed loop's n_iters sequential job barriers (assign → explode →
-    agg → collect per iteration) are pure scheduling latency at that size.
-    One bounded collect replaces n_iters+2 jobs; same init policy (md5
-    key order), same argmax assignment, same mean recentre — values equal
-    up to float associativity, exactly the fast path's existing contract.
-    Above the bound (or with ``deterministic=True``, the oracle path —
-    bitwise-pinned to the map-reduce plan) the distributed loop runs
-    unchanged; at true corpus scale pass a sample, as every IVF build
-    does.
-
-    Deterministic: init = the ``n_cells`` corpus vectors with the smallest
-    md5(seed, id) keys; Lloyd iterations assign by max cosine (normalized
-    dot) and recentre with exact per-dimension means via posexplode + avg —
-    each iteration is ONE pass over the corpus plus an
-    ``n_cells × dim``-row aggregate (driver-sized), the standard
-    map-reduce k-means shape that survives any corpus size.
-    Returns the (n_cells, dim) L2-normalized centroid matrix.
-
-    ``deterministic=True`` makes the result BITWISE-reproducible regardless
-    of partitioning or merge order (and exactly replicable in numpy —
-    :func:`ivf_train_centroids_numpy` — which is what lets the driver query
-    inject the trained centroids into a DuckDB oracle as literals):
-    assignment uses sequential JVM fold dots instead of BLAS, and the
-    recentre means fold each (cell, pos) value list in SORTED order, so the
-    float sum no longer depends on partial-aggregation order.  The sorted
-    fold collects per-group values, so this mode is for oracle/test scale;
-    the default map-reduce partial-sum path is the 100 TB one.
+    ``deterministic=True`` swaps two kernels for order-fixed folds —
+    sequential dots and sorted sequential means — so the centroids are
+    bitwise-equal to :func:`ivf_train_centroids_numpy`, which is what lets
+    the driver queries inject them into DuckDB oracles as literals.  The
+    default BLAS kernels agree to float associativity.
     """
-    method = "column" if deterministic else "pandas"
-    # Materialize the (id, vec) projection ONCE: the init scan and every
-    # Lloyd iteration are full passes over it, and the un-snapshotted
-    # lineage re-ran the source scan + the ensure_parallelism repartition
-    # per pass (n_iters + 2 scans and shuffles of the vectors).  k-means
-    # training input is the classic cache candidate (guide §5: reused AND
-    # expensive to recompute); the materialized relation is the pruned
-    # (id, vec) projection only.
-    proj = corpus if prepared else corpus.select(id_col, vec_col)
-    if not deterministic:
-        # bounded probe-collect: ≤ max+1 rows ever reach the driver; a
-        # corpus past the bound falls through to the distributed loop.
-        # Arrow transfer (toPandas), NOT collect(): row-based collect of
-        # 150k array<float> rows measured ~30 s of pure driver
-        # deserialization — more than the whole distributed loop — while
-        # the Arrow path moves the same batch in ~1 s (guide §6 "Arrow
-        # for driver transfers").  The probe runs BEFORE any snapshot so
-        # the driver-trained common case never pays a corpus
-        # materialization it would not reuse.
-        pdf = (
-            proj.select(id_col, vec_col)
-            .limit(max_driver_train_rows + 1)
-            .toPandas()
-        )
-        if len(pdf) == 0:
-            raise ValueError("ivf_train_centroids: empty corpus")
-        if len(pdf) <= max_driver_train_rows:
-            ids = pdf[id_col].tolist()
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            return _train_centroids_numpy_fast(ids, mat, n_cells, n_iters, seed)
-    # deterministic or above-bound: the init scan + every Lloyd pass reads
-    # the projection — materialize it once (see docstring)
-    c = proj if prepared else snapshot(ensure_parallelism(proj))
-    key = F.md5(F.concat_ws("\x1f", F.lit(str(seed)), F.col(id_col).cast("string")))
-    init_rows = (
-        c.select(vec_col, key.alias("_k"))
-        .orderBy("_k")
-        .limit(n_cells)
-        .collect()
-    )
-    if not init_rows:
+    pdf = _train_sample(corpus, dim, id_col, vec_col, seed)
+    if len(pdf) == 0:
         raise ValueError("ivf_train_centroids: empty corpus")
-    # tiny corpora degrade gracefully: fewer cells than requested
-    cents = np.vstack([np.asarray(r[vec_col], dtype="float64") for r in init_rows])
-    norms = np.linalg.norm(cents, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    cents = cents / norms
-
-    for _ in range(n_iters):
-        assigned = _assign_cells(c, cents, vec_col, method=method)
-        vals = assigned.select("_cell", F.posexplode(vec_col).alias("_pos", "_x"))
-        if deterministic:
-            stats = vals.groupBy("_cell", "_pos").agg(
-                F.aggregate(
-                    F.sort_array(F.collect_list("_x")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("_s"),
-                F.count("*").alias("_n"),
-            ).collect()
-        else:
-            stats = vals.groupBy("_cell", "_pos").agg(
-                F.sum("_x").alias("_s"), F.count("*").alias("_n")
-            ).collect()
-        new = cents.copy()
-        acc = {}
-        for r in stats:
-            acc.setdefault(r["_cell"], np.zeros(dim))[r["_pos"]] = r["_s"] / r["_n"]
-        for cell, vec in acc.items():
-            n = np.linalg.norm(vec)
-            if n > 0:
-                new[cell] = vec / n
-        cents = new
-    return cents
-
-
-def _train_centroids_numpy_fast(
-    ids, mat: np.ndarray, n_cells: int, n_iters: int, seed: int
-) -> np.ndarray:
-    """Driver-side Lloyd loop for the FAST (non-deterministic) path —
-    semantics mirror the distributed fast plan exactly: md5-key init
-    (identical keys to the Spark expression), assignment = stable argmax
-    of normalized-vector · centroid (the pandas `_assign_cells` kernel),
-    recentre = mean of the RAW member vectors, empty cells keep their
-    centroid.  Values equal up to float associativity (BLAS vs
-    partial-sum merge order) — the fast path's existing contract.  Not
-    the oracle twin: that is :func:`ivf_train_centroids_numpy`, which
-    pins the deterministic sorted-fold plan bitwise."""
-    import hashlib
-
-    keys = [
-        hashlib.md5(f"{seed}\x1f{i}".encode()).hexdigest() for i in ids
-    ]
-    order = sorted(range(len(keys)), key=lambda j: keys[j])[:n_cells]
-    cents = mat[order].astype("float64").copy()
-    norms = np.linalg.norm(cents, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    cents = cents / norms
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    mn = mat / nrm
-    for _ in range(n_iters):
-        cells = np.argmax(mn @ cents.T, axis=1)  # first max == pandas kernel
-        new = cents.copy()
-        for cell in np.unique(cells):
-            vec = mat[cells == cell].mean(axis=0)
-            n = np.linalg.norm(vec)
-            if n > 0:
-                new[cell] = vec / n
-        cents = new
-    return cents
+    mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+    return _lloyd(mat, n_cells, n_iters, deterministic)
 
 
 def ivf_train_centroids_numpy(
@@ -473,39 +370,57 @@ def ivf_train_centroids_numpy(
     seed: int = 42,
 ) -> np.ndarray:
     """Exact numpy replica of ``ivf_train_centroids(deterministic=True)``:
-    same md5 init, sequential-fold dots (``cumsum`` IS the left fold), and
-    sorted sequential-fold means — bitwise-equal centroids.  Used by the
-    s_ivf_topk oracle builder to embed the trained centroids as SQL
-    literals without a SparkSession, and by tests to pin the two paths."""
+    the same md5-key sample via hashlib, then the same Lloyd loop —
+    bitwise-equal centroids.  Used by the s_ivf_topk / d_semantic_dedup
+    oracle builders to embed the trained centroids as SQL literals without
+    a SparkSession, and by tests as the trainer's reference."""
     import hashlib
 
-    keys = [
-        hashlib.md5(f"{seed}\x1f{i}".encode()).hexdigest() for i in ids.tolist()
-    ]
-    order = sorted(range(len(keys)), key=lambda j: keys[j])[:n_cells]
-    cents = mat[order].astype("float64").copy()
+    ids = ids.tolist()
+    keys = [hashlib.md5(f"{seed}\x1f{i}".encode()).hexdigest() for i in ids]
+    order = sorted(range(len(ids)), key=lambda j: (keys[j], ids[j]))
+    order = order[: MAX_TRAIN_ELEMS // mat.shape[1]]
+    return _lloyd(mat[order].astype("float64"), n_cells, n_iters, True)
+
+
+def _lloyd(
+    mat: np.ndarray, n_cells: int, n_iters: int, deterministic: bool
+) -> np.ndarray:
+    """The one Lloyd loop over the key-ordered sample ``mat``.
+
+    Deterministic kernels: dots are sequential left folds (``cumsum`` IS
+    the fold — bitwise the JVM zip_with/aggregate and DuckDB
+    list_dot_product), means fold each column in sorted order.  Otherwise
+    BLAS dots and ``mean``.  ``argmax`` takes the first max: the
+    smallest-index tie-break of the column-mode cell ranking."""
+    cents = mat[:n_cells]
     norms = np.linalg.norm(cents, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     cents = cents / norms
-
-    m = mat.astype("float64")
-    dim = m.shape[1]
     for _ in range(n_iters):
-        # sequential left-fold dot: cumsum of elementwise products
-        dots = np.cumsum(m[:, None, :] * cents[None, :, :], axis=2)[:, :, -1]
-        cells = np.argmax(dots, axis=1)  # first max == smallest index tie-break
-        new = cents.copy()
+        dots = _fold_dots(mat, cents) if deterministic else mat @ cents.T
+        cells = np.argmax(dots, axis=1)
         for cell in np.unique(cells):
-            sub = m[cells == cell]
-            vec = np.zeros(dim)
-            for pos in range(dim):
-                vals = np.sort(sub[:, pos])
-                vec[pos] = np.cumsum(vals)[-1] / len(vals)
+            sub = mat[cells == cell]
+            if deterministic:
+                vec = np.cumsum(np.sort(sub, axis=0), axis=0)[-1] / len(sub)
+            else:
+                vec = sub.mean(axis=0)
             n = np.linalg.norm(vec)
             if n > 0:
-                new[cell] = vec / n
-        cents = new
+                cents[cell] = vec / n
     return cents
+
+
+def _fold_dots(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(rows, n_cells) sequential-fold dots, computed in row blocks so the
+    (rows, n_cells, dim) product never exceeds ~2^22 elements (a full
+    200k × 64 × 64 product is 6.5 GB)."""
+    step = max(1, (1 << 22) // cents.size)
+    return np.vstack([
+        np.cumsum(mat[i : i + step, None, :] * cents[None, :, :], axis=2)[:, :, -1]
+        for i in range(0, len(mat), step)
+    ])
 
 
 def _cell_rank_array(vec_col: str, centroids: np.ndarray):
@@ -590,17 +505,16 @@ def ivf_topk(
 
     ``method="pandas"`` (default): Arrow-batched BLAS matmuls for cell
     assignment and probing.  ``method="column"`` + ``deterministic=True``:
-    sequential JVM fold dots everywhere and order-independent training —
-    bitwise-replicable in DuckDB with the trained centroids as literals
-    (the oracle-checked driver query s_ivf_topk).
+    sequential JVM fold dots everywhere and fold-kernel training on the
+    md5-key sample — bitwise-replicable in DuckDB with the trained
+    centroids as literals (the oracle-checked driver query s_ivf_topk).
     """
-    # ONE materialized (id, vec) projection feeds the init scan, every
-    # training iteration AND the final cell assignment — the previous
-    # lineage re-scanned + re-repartitioned the source per pass.
+    # ONE materialized (id, vec) projection feeds the training sample job
+    # AND the final cell assignment — the source is scanned once.
     c0 = snapshot(ensure_parallelism(corpus.select(id_col, vec_col)))
     cents = ivf_train_centroids(
         c0, dim, n_cells, n_iters, id_col, vec_col, seed,
-        deterministic=deterministic, prepared=True,
+        deterministic=deterministic,
     )
     assigned = snapshot(_assign_cells(c0, cents, vec_col, method=method))
 
@@ -725,13 +639,15 @@ def semantic_dedup(
 
     Returns (id_col, cell, keep, dup_of).
 
-    Scale shape: centroid training = ``n_iters`` corpus passes + a
-    driver-sized (n_cells × dim) aggregate (ivf_train_centroids);
-    assignment is a map-only broadcast-closure pass; the pair search is an
-    equi-self-join on the cell id — shuffle ∝ corpus rows, compare work
-    bounded by the largest cell (AQE skew-split absorbs unbalanced cells;
-    raise ``n_cells`` to cap |cell| — the paper runs k ≈ n/100k).  Nothing
-    is all-pairs, nothing driver-side.  ``deterministic=True`` +
+    Scale shape: centroid training = one top-k pass that moves a seeded,
+    element-bounded md5-key sample to the driver, which trains on it
+    (ivf_train_centroids; above the bound the centroids come from the
+    sample); assignment is a map-only broadcast-closure pass; the pair
+    search is an equi-self-join on the cell id — shuffle ∝ corpus rows,
+    compare work bounded by the largest cell (AQE skew-split absorbs
+    unbalanced cells; raise ``n_cells`` to cap |cell| — the paper runs
+    k ≈ n/100k).  Nothing is all-pairs; only the bounded sample is
+    driver-side.  ``deterministic=True`` +
     ``method='column'`` makes every value (cells, cosines, drops)
     bitwise-replicable in numpy/DuckDB, which is what the driver oracle
     injects as centroid literals.
@@ -742,14 +658,13 @@ def semantic_dedup(
     """
     c = ensure_parallelism(corpus.select(id_col, vec_col))
     if centroids is None:
-        # shared materialized projection: training passes + final
+        # shared materialized projection: training sample + final
         # assignment.  With caller-provided centroids the assignment is
         # the projection's ONLY consumer — no snapshot then.
         c = snapshot(c)
         centroids = ivf_train_centroids(
             c, dim, n_cells=n_cells, n_iters=n_iters, id_col=id_col,
             vec_col=vec_col, seed=seed, deterministic=deterministic,
-            prepared=True,
         )
     assigned = snapshot(
         _assign_cells(c, centroids, vec_col, method=method).select(

@@ -53,7 +53,8 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
     """The r7 linear-time gram builder (_sliding_concat, zip_with chain)
     must be VALUE-IDENTICAL to the reference transform+slice form it
     replaced — including the short-document tail grams produced by slice
-    truncation — for every gram width in use (1, 2, 3, 5, 13)."""
+    truncation and the ``[""]`` of NULL text — for every gram width in
+    use (1, 2, 3, 5, 13)."""
     from imgfact_spark.functions.text import normalized_tokens
     from imgfact_spark.operators.dedup import _sliding_concat
 
@@ -64,7 +65,7 @@ def test_sliding_concat_matches_transform_slice_reference(spark):
                 [
                     "", " ", "\t\n", "a", "a b", "a b c", "a  b\tc d",
                     "x " * 30, "one two three four five six",
-                    "A B a b A B a", "  lead trail  ",
+                    "A B a b A B a", "  lead trail  ", None,
                 ]
             )
         ],

@@ -312,12 +312,10 @@ def test_ivf_deterministic_training_matches_numpy_replica(spark):
     assert np.array_equal(got, got2)
 
 
-def test_ivf_fast_driver_training_matches_distributed_loop(spark):
-    """Fast-mode training collects and trains driver-side under the
-    max_driver_train_rows contract (r7 job-latency optimization); forcing
-    the bound to 0 must take the distributed Lloyd loop, and the two must
-    agree to float-associativity tolerance (the fast path's contract) with
-    identical cell assignments on the fixture."""
+def test_ivf_fast_training_matches_deterministic(spark):
+    """The two kernel choices of the one Lloyd loop (BLAS dots + mean vs
+    sequential folds) agree to float associativity, with identical cell
+    assignments on the fixture."""
     from imgfact_spark.operators.similarity import (
         _assign_cells,
         ivf_train_centroids,
@@ -325,20 +323,119 @@ def test_ivf_fast_driver_training_matches_distributed_loop(spark):
 
     df, _ = _vectors(spark)
     fast = ivf_train_centroids(df, DIM, n_cells=8, n_iters=3)
-    dist = ivf_train_centroids(
-        df, DIM, n_cells=8, n_iters=3, max_driver_train_rows=0
+    det = ivf_train_centroids(df, DIM, n_cells=8, n_iters=3, deterministic=True)
+    assert fast.shape == det.shape
+    assert np.allclose(fast, det, atol=1e-9), "kernels diverge"
+
+    def cells(cents):
+        return {
+            r["vec_id"]: r["_cell"]
+            for r in _assign_cells(df, cents, "embedding").collect()
+        }
+
+    assert cells(fast) == cells(det)
+
+
+def test_ivf_training_above_bound_uses_md5_key_sample(spark, monkeypatch):
+    """Above MAX_TRAIN_ELEMS the driver gets exactly MAX_TRAIN_ELEMS // dim
+    rows — the smallest hashlib md5(seed, id) keys, whatever the
+    partitioning — and deterministic training on that sample equals the
+    numpy replica run on the same subset."""
+    import hashlib
+
+    from imgfact_spark.operators import similarity as sim
+
+    dim, n, cap = 1024, 40, 8
+    monkeypatch.setattr(sim, "MAX_TRAIN_ELEMS", cap * dim + 100)
+    rng = np.random.RandomState(3)
+    vecs = rng.standard_normal((n, dim))
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(n)],
+        "vec_id long, embedding array<double>",
     )
-    assert fast.shape == dist.shape
-    assert np.allclose(fast, dist, atol=1e-9), "training paths diverge"
-    a_fast = {
-        r["vec_id"]: r["_cell"]
-        for r in _assign_cells(df, fast, "embedding").collect()
-    }
-    a_dist = {
-        r["vec_id"]: r["_cell"]
-        for r in _assign_cells(df, dist, "embedding").collect()
-    }
-    assert a_fast == a_dist
+
+    def sample_ids(d):
+        return sim._train_sample(d, dim, "vec_id", "embedding", 42)["vec_id"].tolist()
+
+    want = sorted(range(n), key=lambda i: hashlib.md5(f"42\x1f{i}".encode()).hexdigest())
+    assert sim.MAX_TRAIN_ELEMS // dim == cap
+    assert sample_ids(df) == want[:cap]
+    assert sample_ids(df.repartition(7)) == want[:cap]
+
+    got = sim.ivf_train_centroids(df, dim, n_cells=3, n_iters=2, deterministic=True)
+    sub = np.array(want[:cap])
+    ref = sim.ivf_train_centroids_numpy(sub, vecs[sub], n_cells=3, n_iters=2)
+    assert np.array_equal(got, ref)
+    # the replica applies the same bound to the full corpus
+    full = sim.ivf_train_centroids_numpy(np.arange(n), vecs, n_cells=3, n_iters=2)
+    assert np.array_equal(got, full)
+    got7 = sim.ivf_train_centroids(
+        df.repartition(7), dim, n_cells=3, n_iters=2, deterministic=True
+    )
+    assert np.array_equal(got, got7)
+
+
+def test_ivf_training_one_iteration_hand_computed(spark):
+    """Two well-separated clusters whose members are known: one Lloyd
+    iteration yields each cluster's normalized member mean, in both
+    modes.  The empty corpus raises ValueError."""
+    import hashlib
+
+    import pytest
+
+    from imgfact_spark.operators.similarity import ivf_train_centroids
+
+    n, dim = 20, 4
+    rank = sorted(range(n), key=lambda i: hashlib.md5(f"42\x1f{i}".encode()).hexdigest())
+    # the key-smallest id seeds cell 0, the next one cell 1: alternate
+    # cluster membership along the key order so each seed is in its own
+    members = [rank[0::2], rank[1::2]]
+    rng = np.random.RandomState(11)
+    vecs = np.zeros((n, dim))
+    for c, ids in enumerate(members):
+        for i in ids:
+            vecs[i] = np.eye(dim)[c] * 5 + rng.uniform(0, 0.5, dim)
+    df = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    want = np.vstack([vecs[ids].mean(axis=0) for ids in members])
+    want /= np.linalg.norm(want, axis=1, keepdims=True)
+    for det in (False, True):
+        got = ivf_train_centroids(df, dim, n_cells=2, n_iters=1, deterministic=det)
+        assert np.allclose(got, want, rtol=0, atol=1e-12), det
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError):
+        ivf_train_centroids(empty, dim=dim, n_cells=2)
+
+
+def test_ivf_deterministic_kernels_are_sequential_folds():
+    """deterministic=True dots and means are plain left folds — the
+    JVM aggregate / DuckDB list_dot_product order — so the oracle's
+    centroid literals do not depend on the BLAS build: after one
+    iteration each centroid is the normalized left-fold mean of its
+    members in sorted order, with members picked by left-fold dots."""
+    from functools import reduce
+
+    from imgfact_spark.operators.similarity import _fold_dots, _lloyd
+
+    rng = np.random.RandomState(5)
+    mat = rng.standard_normal((300, 7)) * 10.0 ** rng.randint(-8, 8, (300, 7))
+    cents = mat[:3] / np.linalg.norm(mat[:3], axis=1, keepdims=True)
+
+    def fold(xs):
+        return reduce(lambda acc, x: acc + x, xs, 0.0)
+
+    dots = np.array([[fold(a * b for a, b in zip(v, c)) for c in cents] for v in mat])
+    assert np.array_equal(_fold_dots(mat, cents), dots)
+    cells = np.argmax(dots, axis=1)
+    want = cents.copy()
+    for cell in np.unique(cells):
+        sub = mat[cells == cell]
+        vec = np.array([fold(sorted(sub[:, j])) / len(sub) for j in range(7)])
+        want[cell] = vec / np.linalg.norm(vec)
+    assert np.array_equal(_lloyd(mat, 3, 1, True), want)
 
 
 def test_ivf_column_mode_matches_pandas_candidates(spark):
