@@ -1240,7 +1240,9 @@ def s_ivf_topk(spark, sf_dir):
     """IVF approximate top-k (spherical k-means coarse quantizer + nprobe
     cell probing) — the second ANN scale path next to LSH.  The driver
     query runs ``method='column', deterministic=True``: sequential JVM fold
-    dots, and the driver trains on the seeded md5-key sample (the whole
+    dots for cell assignment and probing, numpy ``cumsum`` folds (bitwise
+    the JVM fold and list_dot_product) in the per-cell scoring kernel, and
+    the driver trains on the seeded md5-key sample (the whole
     500-row corpus here, under the element bound) with fold kernels, so
     the trained centroids are bitwise-replicable in numpy and injectable
     into the DuckDB oracle as literals (was rows-only in rounds 1-2).  The

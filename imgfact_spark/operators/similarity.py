@@ -8,13 +8,17 @@
     The 100 TB path: shuffle cost ∝ bucket collisions, not |corpus|×|queries|.
   * ivf_topk — IVF coarse quantizer (spherical k-means trained on the
     driver over a seeded, element-bounded md5-key sample) + distributed
-    nprobe cell probing — the second ANN scale path (FAISS shape).
+    nprobe cell probing; the corpus and the probes cogroup on the cell id
+    and one Arrow kernel scores each probed cell's members × queries
+    block — the second ANN scale path (FAISS IVF-flat shape).
   * cosine_neardup_pairs — embedding near-duplicate pairs via the same LSH
     tables + exact cosine verification.
 
 Dot products run JVM-side (zip_with/aggregate) by default; for wide vectors
 or many queries the ``method="pandas"`` paths switch to Arrow-batched numpy
-matmuls with identical outputs.
+matmuls with identical outputs.  The IVF cell kernel reproduces the JVM
+folds in numpy (``cumsum``), so its cosines are bitwise the column-mode
+values in both modes.
 """
 
 from __future__ import annotations
@@ -23,14 +27,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from imgfact_spark.functions.vectors import cosine_sim
 from imgfact_spark.operators.topk import topk_per_group
 from imgfact_spark.operators.util import ensure_parallelism, snapshot
 
 # The query relation is broadcast (and, for brute force, collected) under a
-# documented small-query contract.  Above this row count the plan flips to
-# shuffle joins keyed on the probe/bucket/query-id columns instead of
+# documented small-query contract.  Above this row count the LSH plan flips
+# to shuffle joins keyed on the bucket/query-id columns instead of
 # silently OOMing the executors with an over-sized broadcast.  200k rows ×
 # a 64-float vector ≈ 110 MB serialized — the upper end of what a healthy
 # executor broadcast should carry.
@@ -460,10 +465,8 @@ def _assign_cells(
     def cell_udf(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int32")
-        mat = np.vstack(v.to_numpy()).astype("float64")
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        return pd.Series(np.argmax((mat / nrm) @ ct, axis=1).astype("int32"))
+        sims = _unit_rows(np.vstack(v.to_numpy())) @ ct
+        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
 
     return df.withColumn("_cell", cell_udf(F.col(vec_col)))
 
@@ -482,52 +485,55 @@ def ivf_topk(
     seed: int = 42,
     method: str = "pandas",
     deterministic: bool = False,
-    max_broadcast_queries: int = DEFAULT_MAX_BROADCAST_QUERIES,
-    n_queries: "int | None" = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest-centroid
-    cell; each query probes its ``nprobe`` nearest cells and reranks those
-    candidates exactly — shuffle cost ∝ probed-cell sizes, not
-    |corpus|×|queries| (the FAISS IVF shape re-expressed as a cell equi-join).
+    cell; each query probes its ``nprobe`` nearest cells and is scored
+    exactly against those cells' members only — work ∝ probed-cell sizes,
+    not |corpus|×|queries| (the FAISS IVF-flat shape).
 
     Probe assignment is DISTRIBUTED: the same closed-over centroid matrix
     that assigns corpus cells scores every query batch, taking the
-    top-``nprobe`` per query (round-2 ran a driver-side Python loop over
-    ``queries.collect()`` — the one undistributed compute in the ANN tier;
-    at 10^6 queries that materialized every vector on the driver).  The
-    probe relation inherits the query id's type from ``queries`` itself, so
-    non-long ids work.
+    top-``nprobe`` per query.  The probe relation ``(query_id, vec,
+    _cell)`` carries the query vector and inherits the query id's type
+    from ``queries`` itself, so non-long ids work.
 
-    The probe and rerank relations broadcast under ``max_broadcast_queries``
-    query rows; above it they join by shuffle instead — keyed on the cell
-    id for the probe and the query id for the rerank — so arbitrarily large
-    query batches get a plan change, not an executor OOM.
+    Scoring is FAISS's inverted-list scan: the corpus and the probe
+    relation cogroup on ``_cell`` (both sides shuffle on the cell id;
+    nothing query-sized is broadcast, so there is no query-count gate) and
+    :func:`_cell_kernel` scores each cell's members × probing queries in
+    one Arrow call.  No row carries a vector per (query, candidate) pair,
+    and no pair needs deduplication: every vector has one cell and a
+    query's probed cells are distinct.  The kernel keeps only rows that
+    can still reach a query's top k, so the scored relation grows with
+    |Q|·nprobe·k, not |Q|·nprobe·|cell|.  A cell's members meet the kernel
+    at once: raise ``n_cells`` to bound |cell|.
 
     ``method="pandas"`` (default): Arrow-batched BLAS matmuls for cell
-    assignment and probing.  ``method="column"`` + ``deterministic=True``:
-    sequential JVM fold dots everywhere and fold-kernel training on the
-    md5-key sample — bitwise-replicable in DuckDB with the trained
-    centroids as literals (the oracle-checked driver query s_ivf_topk).
+    assignment, probing and cell scoring.  ``method="column"`` +
+    ``deterministic=True``: sequential fold dots everywhere (JVM folds for
+    assignment and probing, numpy ``cumsum`` folds in the cell kernel) and
+    fold-kernel training on the md5-key sample — bitwise-replicable in
+    DuckDB with the trained centroids as literals (the oracle-checked
+    driver query s_ivf_topk).
     """
     # ONE materialized (id, vec) projection feeds the training sample job
-    # AND the final cell assignment — the source is scanned once.
+    # AND the cell assignment — the source is scanned once.
     c0 = snapshot(ensure_parallelism(corpus.select(id_col, vec_col)))
     cents = ivf_train_centroids(
         c0, dim, n_cells, n_iters, id_col, vec_col, seed,
         deterministic=deterministic,
     )
-    assigned = snapshot(_assign_cells(c0, cents, vec_col, method=method))
+    assigned = _assign_cells(c0, cents, vec_col, method=method)
 
     nprobe_eff = min(nprobe, len(cents))
+    # fresh aliases: a query relation derived from the corpus shares its
+    # column ids, and cogroup would then bind the kernel's query-side
+    # arguments to the corpus columns
+    q = queries.select(
+        F.col(query_id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+    )
     if method == "column":
-        probes = (
-            queries.select(query_id_col, vec_col)
-            .withColumn(
-                "_cells",
-                F.slice(_cell_rank_array(vec_col, cents), 1, nprobe_eff),
-            )
-            .select(query_id_col, F.explode("_cells").alias("_cell"))
-        )
+        cells = F.slice(_cell_rank_array("_qvec", cents), 1, nprobe_eff)
     else:
         ct = cents.T  # (dim, n_cells)
 
@@ -535,35 +541,119 @@ def ivf_topk(
         def probe_udf(v: pd.Series) -> pd.Series:
             if len(v) == 0:
                 return pd.Series([], dtype="object")
-            mat = np.vstack(v.to_numpy()).astype("float64")
-            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            sims = (mat / nrm) @ ct  # (batch, n_cells)
+            sims = _unit_rows(np.vstack(v.to_numpy())) @ ct  # (batch, n_cells)
             order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe_eff]
             return pd.Series([row.astype("int32") for row in order])
 
-        probes = (
-            queries.select(query_id_col, vec_col)
-            .withColumn("_cells", probe_udf(F.col(vec_col)))
-            .select(query_id_col, F.explode("_cells").alias("_cell"))
-        )
+        cells = probe_udf(F.col("_qvec"))
+    probes = q.select(query_id_col, "_qvec", F.explode(cells).alias("_cell"))
 
-    n_q = _probe_n_queries(queries, max_broadcast_queries, n_queries)
-    q = queries.select(query_id_col, F.col(vec_col).alias("_qvec"))
-    cand = (
-        assigned.join(_query_side(probes, n_q, max_broadcast_queries), "_cell")
-        .select(query_id_col, id_col, vec_col)
-        .dropDuplicates([query_id_col, id_col])
-    )
+    schema = T.StructType([
+        q.schema[query_id_col],
+        c0.schema[id_col],
+        T.StructField("cosine", T.DoubleType()),
+    ])
+
     scored = (
-        cand.join(_query_side(q, n_q, max_broadcast_queries), query_id_col)
-        .withColumn("cosine", F.round(cosine_sim(vec_col, "_qvec"), 6))
-        .drop("_qvec", vec_col)
+        assigned.groupBy("_cell")
+        .cogroup(probes.groupBy("_cell"))
+        .applyInPandas(
+            lambda members, probing: _cell_kernel(
+                members, probing, k, id_col, vec_col, query_id_col, method
+            ),
+            schema,
+        )
+        .withColumn("cosine", F.round("cosine", 6))
     )
     return topk_per_group(
         scored, keys=[query_id_col], order_by=[F.desc("cosine")], k=k,
         tiebreak=[id_col],
     )
+
+
+# Slack of the kernel's prune.  Spark's round(·, 6) is monotone and moves a
+# value by less than 5e-7, so a raw cosine below kth − 1e-6 rounds strictly
+# below the k rows at or above kth and can never enter the (cosine desc,
+# id asc) top k.  The other 1e-6 covers the BLAS scan's distance from the
+# fold values (under 1e-7: float products rounded to float, ulps).
+_PRUNE_SLACK = 2e-6
+
+
+def _cell_kernel(
+    members: pd.DataFrame,
+    probing: pd.DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    method: str,
+) -> pd.DataFrame:
+    """Raw cosines of one IVF cell: its members (id, vec) × the queries
+    probing it (query_id, ``_qvec``), as (query_id, id, cosine) rows,
+    pruned per query to the rows whose scan score is at least that
+    query's k-th best in the block minus :data:`_PRUNE_SLACK` — exact for
+    the rounded top k (see the constant).
+
+    The emitted cosines are always the sequential folds of
+    :func:`_fold_cosines`, bitwise the JVM ``cosine_sim``.  ``column``
+    scans the block with those folds; ``pandas`` scans it with one BLAS
+    matmul over L2-normalized rows and folds only the survivors.  Members
+    are scanned in row blocks of at most ~2^22 products.  A cell no query
+    probes, or a probed cell with no members, yields no rows."""
+    if len(members) == 0 or len(probing) == 0:
+        return pd.DataFrame({
+            query_id_col: probing[query_id_col].iloc[:0],
+            id_col: members[id_col].iloc[:0],
+            "cosine": np.empty(0),
+        })
+    mat = np.vstack(members[vec_col].to_numpy())
+    qmat = np.vstack(probing["_qvec"].to_numpy())
+    qunit = _unit_rows(qmat).T
+    qids = probing[query_id_col].to_numpy()
+    ids = members[id_col].to_numpy()
+    step = max(1, (1 << 22) // qmat.size)
+    parts = []
+    for i in range(0, len(mat), step):
+        block = mat[i : i + step]
+        if method == "column":
+            scan = _fold_cosines(block[:, None, :], qmat[None, :, :])
+        else:
+            scan = _unit_rows(block) @ qunit
+        n = len(scan)
+        kth = np.partition(scan, n - k, axis=0)[n - k] if n > k else -np.inf
+        rows, cols = np.nonzero(~(scan < kth - _PRUNE_SLACK))  # keeps NaN
+        if method == "column":
+            cos = scan[rows, cols]
+        else:
+            cos = _fold_cosines(block[rows], qmat[cols])
+        parts.append(pd.DataFrame({
+            query_id_col: qids[cols], id_col: ids[i + rows], "cosine": cos,
+        }))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """float64 rows scaled to unit L2 norm; zero rows stay zero."""
+    mat = mat.astype("float64")
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    nrm[nrm == 0] = 1.0
+    return mat / nrm
+
+
+def _fold_cosines(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosines of ``a``'s and ``b``'s vectors (last axis; the other axes
+    broadcast) with the arithmetic of the JVM ``cosine_sim``: products in
+    the inputs' own precision (float × float is a float there too), each
+    dot and squared norm a sequential double fold (``cumsum``),
+    ``sqrt(|a|²)·sqrt(|b|²)`` as the denominator and 0.0 where it is not
+    positive — bitwise the JVM value and DuckDB's ``list_dot_product``."""
+    dots = np.cumsum(a * b, axis=-1, dtype="float64")[..., -1]
+    den = _fold_norms(a) * _fold_norms(b)
+    return np.divide(dots, den, out=np.zeros(dots.shape), where=den > 0)
+
+
+def _fold_norms(a: np.ndarray) -> np.ndarray:
+    return np.sqrt(np.cumsum(a * a, axis=-1, dtype="float64")[..., -1])
 
 
 def cosine_neardup_pairs(

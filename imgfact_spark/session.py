@@ -83,6 +83,13 @@ def get_spark(
         # Dimension tables (relation templates, alias dicts) broadcast freely.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # PySpark 4 records the Python call site of every Column function
+        # (a stack walk plus extra py4j calls per F.* call) so errors can
+        # quote file:line.  Plans here are built from thousands of F.* calls:
+        # on 12 paired warm kg builds (local[4]) turning it off cut the
+        # driver's Python CPU per build from 0.34 to 0.18 s.  Errors keep
+        # their message and JVM plan context; only the Python fragment goes.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # managed (bucketed) tables land in a temp warehouse, not the repo
         .config(

@@ -15,6 +15,9 @@ driver's ``events`` stream shape.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -457,11 +460,29 @@ def incremental_lsh_dedup(
     — the index store is append-only, never rewritten.  Idempotent on
     foreachBatch retry: each batch overwrites its own batch_id=N
     partition, exactly like :func:`incremental_extract`.
+
+    The index is stamped with what its band hashes depend on — the
+    production :data:`~imgfact_spark.operators.dedup.MINHASH_FAMILY_VERSION`,
+    ``hash_mode``, ``n``, ``num_hashes`` and the band shape — in
+    ``{work_dir}/index/_family.json`` (a local file, like the table
+    store's markers; Spark's readers skip underscore names).  A run whose
+    stamp differs, or that finds an index without one, raises before the
+    stream starts: hashes from another family match nothing, so reusing
+    the index would silently re-admit every historical duplicate.
     """
     from pyspark.sql import types as T
 
-    from imgfact_spark.operators.dedup import dedup_against_index
+    from imgfact_spark.operators.dedup import (
+        MINHASH_FAMILY_VERSION,
+        dedup_against_index,
+    )
 
+    index_path = f"{work_dir}/index"
+    _stamp_band_index(index_path, {
+        "family_version": MINHASH_FAMILY_VERSION, "hash_mode": hash_mode,
+        "n": n, "num_hashes": num_hashes, "bands": bands,
+        "rows_per_band": rows_per_band,
+    })
     index_schema = T.StructType(
         [
             schema[id_col],
@@ -474,7 +495,6 @@ def incremental_lsh_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
 
-        index_path = f"{work_dir}/index"
         try:
             # STRICTLY PRIOR batches only (batch_id is the discovered
             # partition column): on a foreachBatch replay the directory
@@ -490,7 +510,7 @@ def incremental_lsh_dedup(
                 .select(id_col, "band", "bh")
             )
         except AnalysisException as exc:
-            # first batch only: the index directory does not exist yet.
+            # first batch only: the index directory holds just its stamp.
             # Match the ERROR CLASS, not just the exception type — in
             # Spark 4 column-resolution/schema errors on an existing but
             # malformed index directory are also AnalysisException, and a
@@ -501,7 +521,7 @@ def incremental_lsh_dedup(
                 if hasattr(exc, "getCondition")
                 else exc.getErrorClass()
             )
-            if cond != "PATH_NOT_FOUND":
+            if cond != "UNABLE_TO_INFER_SCHEMA":
                 raise
             index = spark.createDataFrame([], index_schema)
         res = dedup_against_index(
@@ -530,3 +550,29 @@ def incremental_lsh_dedup(
     if await_termination:
         q.awaitTermination()
     return q
+
+
+def _stamp_band_index(index_path: str, family: dict) -> None:
+    """Stamp a new band index with ``family``, or check an existing one's
+    stamp; raise, naming the rebuild, when it is missing or differs."""
+    marker = os.path.join(index_path, "_family.json")
+    if os.path.exists(marker):
+        with open(marker) as f:
+            stored = json.load(f)
+        if stored == family:
+            return
+        found = f"is stamped {stored}"
+    elif not os.path.isdir(index_path) or not os.listdir(index_path):
+        os.makedirs(index_path, exist_ok=True)
+        with open(marker, "w") as f:
+            json.dump(family, f, sort_keys=True)
+        return
+    else:
+        found = "has no _family.json stamp (written before stamps existed)"
+    raise RuntimeError(
+        f"incremental_lsh_dedup: the band index at {index_path} {found}, but "
+        f"this run hashes with {family}; band hashes from another family or "
+        "shape match nothing, so every historical duplicate would be "
+        "re-admitted.  Rebuild the index: remove the work directory and the "
+        "streaming checkpoint, then re-run over the whole input."
+    )

@@ -293,3 +293,41 @@ def test_dedup_against_index_no_cartesian_and_band_equijoins(spark):
     plan = _formatted(res.kept)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "LeftAnti" in plan
+
+
+def _logical_nodes(plan):
+    """Every node of a JVM logical plan, depth first."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _logical_nodes(kids.apply(i))
+
+
+def _seq_names(seq) -> set[str]:
+    return {seq.apply(i).toString().split("#")[0] for i in range(seq.size())}
+
+
+def test_ivf_topk_plan_is_one_cell_cogroup(spark):
+    """IVF scores each probed cell in ONE cogrouped Arrow kernel: exactly
+    one FlatMapCoGroupsInPandas, nothing broadcast, no aggregate keyed on
+    (query_id, vec_id) (pairs are unique by construction — no dedup), and
+    no vector column reaches the top-k window."""
+    from imgfact_spark.operators.similarity import ivf_topk
+
+    e = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    out = ivf_topk(e, q, dim=64, k=5, n_cells=8, nprobe=4)
+    plan = _executed(out)
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    assert "BroadcastExchange" not in plan
+    windows = 0
+    for node in _logical_nodes(out._jdf.queryExecution().optimizedPlan()):
+        name = node.nodeName()
+        if name == "Aggregate":
+            assert _seq_names(node.groupingExpressions()) != {"query_id", "vec_id"}
+        if name in ("Window", "WindowGroupLimit"):
+            windows += 1
+            assert "embedding" not in _seq_names(node.child().output()), name
+    assert windows >= 1

@@ -101,12 +101,11 @@ def test_brute_force_pandas_method_parity(spark):
 
 
 def test_query_size_guard_fallback_identical(spark):
-    """Above max_broadcast_queries the ANN plans flip from broadcast-probe
-    to shuffle joins (cell/bucket + query-id keys) with IDENTICAL results;
-    brute force raises, naming the contract."""
+    """Above max_broadcast_queries the LSH plan flips from broadcast-probe
+    to shuffle joins (bucket + query-id keys) with IDENTICAL results;
+    brute force raises, naming the contract.  (ivf_topk has no such gate:
+    its cell cogroup shuffles both sides and broadcasts nothing.)"""
     import pytest
-
-    from imgfact_spark.operators.similarity import ivf_topk
 
     df, _ = _vectors(spark)
     q = df.filter(F.col("vec_id") < 5).select(
@@ -127,17 +126,14 @@ def test_query_size_guard_fallback_identical(spark):
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for fn, kw in (
-            (lsh_topk, dict(dim=DIM, k=5, n_planes=6, n_tables=2)),
-            (ivf_topk, dict(dim=DIM, k=5, n_cells=8, nprobe=4)),
-        ):
-            small = fn(df, q, **kw)
-            forced = fn(df, q, max_broadcast_queries=0, **kw)
-            assert rows(small) == rows(forced), fn.__name__
-            small_plan = small._jdf.queryExecution().executedPlan().toString()
-            forced_plan = forced._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastExchange" in small_plan, fn.__name__
-            assert "BroadcastExchange" not in forced_plan, fn.__name__
+        kw = dict(dim=DIM, k=5, n_planes=6, n_tables=2)
+        small = lsh_topk(df, q, **kw)
+        forced = lsh_topk(df, q, max_broadcast_queries=0, **kw)
+        assert rows(small) == rows(forced)
+        small_plan = small._jdf.queryExecution().executedPlan().toString()
+        forced_plan = forced._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in small_plan
+        assert "BroadcastExchange" not in forced_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
 
@@ -468,6 +464,106 @@ def test_ivf_column_mode_matches_pandas_candidates(spark):
         ).collect()
     }
     assert a == b
+
+
+def _tie_corpus(spark):
+    """150 base vectors × 6 copies, each copy exact or perturbed by 1e-7:
+    a query's top k runs through whole groups of rows that share a
+    rounded cosine, so the k boundary falls inside tie groups."""
+    rng = np.random.RandomState(11)
+    base = rng.standard_normal((150, DIM))
+    rows = []
+    for b in range(150):
+        for c in range(6):
+            noise = rng.choice([-1e-7, 0.0, 1e-7], DIM) if c % 2 else 0.0
+            rows.append((b * 6 + c, (base[b] + noise).tolist()))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_ivf_full_probe_equals_brute_force_column(spark):
+    """Probing every cell, ivf_topk equals brute_force_topk(method='column')
+    row for row with BITWISE cosines in both modes: the cell kernel's
+    prune is exact and the cosines it emits are the JVM folds (the pandas
+    mode refolds its BLAS survivors).  Run on the float fixture and on a
+    double tie-stress corpus whose k boundary falls inside tie groups."""
+    from imgfact_spark.operators.similarity import ivf_topk
+
+    cols = ["query_id", "vec_id", "cosine", "rank"]
+    fixture, _ = _vectors(spark)
+    for df, qfilter in (
+        (fixture, F.col("vec_id") < 5),
+        (_tie_corpus(spark), (F.col("vec_id") % 6 == 1) & (F.col("vec_id") < 120)),
+    ):
+        q = df.filter(qfilter).select(F.col("vec_id").alias("query_id"), "embedding")
+        want = sorted(map(tuple, brute_force_topk(df, q, k=10, method="column")
+                          .select(*cols).collect()))
+        for method in ("column", "pandas"):
+            got = ivf_topk(df, q, dim=DIM, k=10, n_cells=8, nprobe=8, method=method)
+            assert sorted(map(tuple, got.select(*cols).collect())) == want, method
+
+
+def test_ivf_single_query_single_probe_meets_empty_query_sides(spark):
+    """One query with nprobe=1: every other cell reaches the cell kernel
+    with an empty query side.  The result is exactly brute force over the
+    probed cell's members; the kernel itself returns typed empty frames
+    for an empty side."""
+    import pandas as pd
+
+    from imgfact_spark.operators.similarity import (
+        _assign_cells,
+        _cell_kernel,
+        ivf_topk,
+        ivf_train_centroids,
+    )
+
+    cols = ["query_id", "vec_id", "cosine", "rank"]
+    df, _ = _vectors(spark)
+    q = df.filter(F.col("vec_id") == 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    for method in ("pandas", "column"):
+        det = method == "column"
+        got = ivf_topk(df, q, dim=DIM, k=5, n_cells=8, nprobe=1,
+                       method=method, deterministic=det)
+        cents = ivf_train_centroids(df, DIM, n_cells=8, deterministic=det)
+        assigned = _assign_cells(df, cents, "embedding", method=method)
+        cell = assigned.filter(F.col("vec_id") == 3).first()["_cell"]
+        members = assigned.filter(F.col("_cell") == cell).drop("_cell")
+        want = brute_force_topk(members, q, k=5, method="column")
+        assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+            map(tuple, want.select(*cols).collect())
+        ), method
+
+    members = pd.DataFrame({"vec_id": [1, 2], "embedding": [np.ones(DIM)] * 2})
+    probing = pd.DataFrame({"query_id": [7], "_qvec": [np.ones(DIM)]})
+    for m, p in ((members, probing.iloc[:0]), (members.iloc[:0], probing)):
+        out = _cell_kernel(m, p, 5, "vec_id", "embedding", "query_id", "pandas")
+        assert list(out.columns) == ["query_id", "vec_id", "cosine"] and len(out) == 0
+        assert out["vec_id"].dtype == np.int64 and out["cosine"].dtype == np.float64
+
+
+def test_ivf_cell_kernel_modes_emit_identical_fold_cosines():
+    """The pandas kernel scans with BLAS but emits the sequential folds:
+    on float vectors (where the JVM rounds each product to float, and BLAS
+    over doubles does not) both modes return the same rows with
+    bitwise-equal cosines, pruned or not."""
+    import pandas as pd
+
+    from imgfact_spark.operators.similarity import _cell_kernel
+
+    rng = np.random.RandomState(9)
+    vecs = rng.standard_normal((300, DIM)).astype("float32")
+    members = pd.DataFrame({"vec_id": np.arange(300), "embedding": list(vecs)})
+    probing = pd.DataFrame({"query_id": np.arange(40), "_qvec": list(vecs[:40])})
+    for k in (300, 10):
+        out = [
+            _cell_kernel(members, probing, k, "vec_id", "embedding", "query_id", m)
+            .sort_values(["query_id", "vec_id"], ignore_index=True)
+            for m in ("column", "pandas")
+        ]
+        if k == 300:
+            assert len(out[0]) == 300 * 40
+        pd.testing.assert_frame_equal(out[0], out[1], check_exact=True)
 
 
 def test_semantic_dedup_drops_planted_copies(spark):

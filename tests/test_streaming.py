@@ -400,3 +400,46 @@ def test_incremental_event_counts_matches_batch_anomaly(spark, tmp_path):
         ).collect()
     }
     assert got == want and len(got) == 80  # 40 hours x 2 types, no NULL row
+
+
+def test_incremental_lsh_dedup_refuses_stale_band_index(spark, tmp_path):
+    """The persisted band index is stamped with its hash family and band
+    shape.  An index stamped by family v1, one without a stamp (written
+    before stamps existed) and a run with another band shape all fail
+    fast, naming the rebuild — instead of silently re-admitting every
+    historical duplicate.  A matching stamp runs."""
+    import json
+
+    import pytest
+
+    from imgfact_spark.operators.dedup import MINHASH_FAMILY_VERSION
+    from imgfact_spark.streaming import incremental_lsh_dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    in_dir, work, ckpt = (str(tmp_path / d) for d in ("in", "work", "ckpt"))
+    docs.filter(F.col("doc_id") >= 450).coalesce(1).write.parquet(in_dir)
+    kw = dict(n=1, num_hashes=32, bands=4, rows_per_band=8, hash_mode="md5")
+
+    def run(**over):
+        incremental_lsh_dedup(spark, in_dir, work, ckpt, docs.schema, **{**kw, **over})
+
+    run()
+    marker = os.path.join(work, "index", "_family.json")
+    with open(marker) as f:
+        stamp = json.load(f)
+    assert stamp == {"family_version": MINHASH_FAMILY_VERSION, **kw}
+    assert spark.read.parquet(f"{work}/index").count() > 0  # stamp is skipped
+
+    with pytest.raises(RuntimeError, match="Rebuild the index"):
+        run(bands=8, rows_per_band=4)
+    with open(marker, "w") as f:
+        json.dump({**stamp, "family_version": 1}, f)
+    with pytest.raises(RuntimeError, match="Rebuild the index"):
+        run()
+    os.remove(marker)
+    with pytest.raises(RuntimeError, match="no _family.json stamp"):
+        run()
+
+    with open(marker, "w") as f:
+        json.dump(stamp, f)
+    run()  # same family and shape: the stream resumes
