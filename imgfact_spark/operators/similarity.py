@@ -16,9 +16,9 @@
 
 Dot products run JVM-side (zip_with/aggregate) by default; for wide vectors
 or many queries the ``method="pandas"`` paths switch to Arrow-batched numpy
-matmuls with identical outputs.  The IVF cell kernel reproduces the JVM
-folds in numpy (``cumsum``), so its cosines are bitwise the column-mode
-values in both modes.
+matmuls with identical outputs.  The IVF cell kernel scans with BLAS and
+refolds its survivors in numpy (``cumsum``), so its cosines are bitwise
+the JVM fold values in both modes.
 """
 
 from __future__ import annotations
@@ -102,8 +102,8 @@ def brute_force_topk(
             f"brute_force_topk: >{max_broadcast_queries} queries exceeds the broadcast-small "
             f"query contract ({max_broadcast_queries}); every query meets "
             "every corpus row, so a large query set needs a bucketed ANN "
-            "plan — use lsh_topk or ivf_topk (their shuffle fallback "
-            "handles large query relations), or raise max_broadcast_queries "
+            "plan — use lsh_topk (its shuffle fallback handles large query "
+            "relations) or ivf_topk, or raise max_broadcast_queries "
             "explicitly if the executors can hold the broadcast."
         )
     if method == "pandas":
@@ -504,17 +504,25 @@ def ivf_topk(
     one Arrow call.  No row carries a vector per (query, candidate) pair,
     and no pair needs deduplication: every vector has one cell and a
     query's probed cells are distinct.  The kernel keeps only rows that
-    can still reach a query's top k, so the scored relation grows with
-    |Q|·nprobe·k, not |Q|·nprobe·|cell|.  A cell's members meet the kernel
-    at once: raise ``n_cells`` to bound |cell|.
+    can still reach a query's top k (k per query and probed cell, plus
+    rows within 2e-6 of the k-th best), so the scored relation grows with
+    |Q|·nprobe·k, not |Q|·nprobe·|cell|.
+
+    Memory: both sides of a cell meet one kernel call whole — its members
+    (raise ``n_cells`` to bound |cell|) and every query that probes it,
+    about |Q|·nprobe/n_cells query vectors, more for a popular cell.
+    Nothing bounds or spills that query frame, so split a query batch too
+    large for one worker into several calls; each query's result depends
+    only on the corpus and ``seed``, never on the other queries.  The
+    scan itself runs in tiles of at most 2^22 scores.
 
     ``method="pandas"`` (default): Arrow-batched BLAS matmuls for cell
-    assignment, probing and cell scoring.  ``method="column"`` +
-    ``deterministic=True``: sequential fold dots everywhere (JVM folds for
-    assignment and probing, numpy ``cumsum`` folds in the cell kernel) and
-    fold-kernel training on the md5-key sample — bitwise-replicable in
-    DuckDB with the trained centroids as literals (the oracle-checked
-    driver query s_ivf_topk).
+    assignment and probing.  ``method="column"`` + ``deterministic=True``:
+    sequential JVM fold dots for assignment and probing, and fold-kernel
+    training on the md5-key sample — bitwise-replicable in DuckDB with the
+    trained centroids as literals (the oracle-checked driver query
+    s_ivf_topk).  The cell kernel is the same in both modes: a BLAS scan
+    whose survivors are refolded, so its cosines are always the JVM folds.
     """
     # ONE materialized (id, vec) projection feeds the training sample job
     # AND the cell assignment — the source is scanned once.
@@ -559,7 +567,7 @@ def ivf_topk(
         .cogroup(probes.groupBy("_cell"))
         .applyInPandas(
             lambda members, probing: _cell_kernel(
-                members, probing, k, id_col, vec_col, query_id_col, method
+                members, probing, k, id_col, vec_col, query_id_col
             ),
             schema,
         )
@@ -575,8 +583,15 @@ def ivf_topk(
 # value by less than 5e-7, so a raw cosine below kth − 1e-6 rounds strictly
 # below the k rows at or above kth and can never enter the (cosine desc,
 # id asc) top k.  The other 1e-6 covers the BLAS scan's distance from the
-# fold values (under 1e-7: float products rounded to float, ulps).
+# fold values (under 2e-7: float products rounded to float in the fold
+# move a unit dot and each norm by at most ~6e-8 relative).
 _PRUNE_SLACK = 2e-6
+
+# Elements of one scan tile (members × queries raw cosines) and of one
+# survivor fold (rows × dim products) in the cell kernel.  A tile spans at
+# least 64·k members, so the tile loop stays short and few rows survive a
+# tile only to fail the cell's final threshold.
+_SCAN_TILE = 1 << 22
 
 
 def _cell_kernel(
@@ -586,20 +601,21 @@ def _cell_kernel(
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    method: str,
 ) -> pd.DataFrame:
     """Raw cosines of one IVF cell: its members (id, vec) × the queries
     probing it (query_id, ``_qvec``), as (query_id, id, cosine) rows,
     pruned per query to the rows whose scan score is at least that
-    query's k-th best in the block minus :data:`_PRUNE_SLACK` — exact for
-    the rounded top k (see the constant).
+    query's k-th best in the cell minus :data:`_PRUNE_SLACK` — exact for
+    the rounded top k (see the constant) and about k rows per query.
 
-    The emitted cosines are always the sequential folds of
-    :func:`_fold_cosines`, bitwise the JVM ``cosine_sim``.  ``column``
-    scans the block with those folds; ``pandas`` scans it with one BLAS
-    matmul over L2-normalized rows and folds only the survivors.  Members
-    are scanned in row blocks of at most ~2^22 products.  A cell no query
-    probes, or a probed cell with no members, yields no rows."""
+    The scan is one BLAS matmul per tile of L2-normalized members ×
+    queries, at most :data:`_SCAN_TILE` scores.  Each query carries its k
+    best scores across the member tiles, so after the last tile its
+    threshold is the cell's k-th best; the survivors of earlier tiles are
+    filtered once more against it.  The emitted cosines are the sequential
+    folds of :func:`_fold_cosines` over the survivors, bitwise the JVM
+    ``cosine_sim``.  A cell no query probes, or a probed cell with no
+    members, yields no rows."""
     if len(members) == 0 or len(probing) == 0:
         return pd.DataFrame({
             query_id_col: probing[query_id_col].iloc[:0],
@@ -608,28 +624,34 @@ def _cell_kernel(
         })
     mat = np.vstack(members[vec_col].to_numpy())
     qmat = np.vstack(probing["_qvec"].to_numpy())
-    qunit = _unit_rows(qmat).T
-    qids = probing[query_id_col].to_numpy()
-    ids = members[id_col].to_numpy()
-    step = max(1, (1 << 22) // qmat.size)
-    parts = []
-    for i in range(0, len(mat), step):
-        block = mat[i : i + step]
-        if method == "column":
-            scan = _fold_cosines(block[:, None, :], qmat[None, :, :])
-        else:
-            scan = _unit_rows(block) @ qunit
-        n = len(scan)
-        kth = np.partition(scan, n - k, axis=0)[n - k] if n > k else -np.inf
-        rows, cols = np.nonzero(~(scan < kth - _PRUNE_SLACK))  # keeps NaN
-        if method == "column":
-            cos = scan[rows, cols]
-        else:
-            cos = _fold_cosines(block[rows], qmat[cols])
-        parts.append(pd.DataFrame({
-            query_id_col: qids[cols], id_col: ids[i + rows], "cosine": cos,
-        }))
-    return pd.concat(parts, ignore_index=True)
+    munit = _unit_rows(mat)
+    qstep = max(1, _SCAN_TILE // (64 * k))
+    mstep = max(64 * k, _SCAN_TILE // min(qstep, len(qmat)))
+    rows, cols = [], []
+    for j in range(0, len(qmat), qstep):
+        qunit = _unit_rows(qmat[j : j + qstep]).T
+        best = np.full((k, qunit.shape[1]), -np.inf)  # best[0]: k-th best
+        hits = []
+        for i in range(0, len(munit), mstep):
+            scan = munit[i : i + mstep] @ qunit
+            best = np.partition(np.vstack([best, scan]), -k, axis=0)[-k:]
+            r, c = np.nonzero(~(scan < best[0] - _PRUNE_SLACK))  # keeps NaN
+            hits.append((i + r, c, scan[r, c]))
+        r, c, score = (np.concatenate(h) for h in zip(*hits))
+        keep = ~(score < best[0][c] - _PRUNE_SLACK)
+        rows.append(r[keep])
+        cols.append(j + c[keep])
+    rows, cols = np.concatenate(rows), np.concatenate(cols)
+    fstep = max(1, _SCAN_TILE // mat.shape[1])
+    cos = np.concatenate([
+        _fold_cosines(mat[rows[s : s + fstep]], qmat[cols[s : s + fstep]])
+        for s in range(0, len(rows), fstep)
+    ])
+    return pd.DataFrame({
+        query_id_col: probing[query_id_col].to_numpy()[cols],
+        id_col: members[id_col].to_numpy()[rows],
+        "cosine": cos,
+    })
 
 
 def _unit_rows(mat: np.ndarray) -> np.ndarray:
@@ -646,10 +668,11 @@ def _fold_cosines(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     the inputs' own precision (float × float is a float there too), each
     dot and squared norm a sequential double fold (``cumsum``),
     ``sqrt(|a|²)·sqrt(|b|²)`` as the denominator and 0.0 where it is not
-    positive — bitwise the JVM value and DuckDB's ``list_dot_product``."""
+    positive — bitwise the JVM value and DuckDB's ``list_dot_product``.
+    A NaN denominator divides, as in Spark, where NaN > 0 holds."""
     dots = np.cumsum(a * b, axis=-1, dtype="float64")[..., -1]
     den = _fold_norms(a) * _fold_norms(b)
-    return np.divide(dots, den, out=np.zeros(dots.shape), where=den > 0)
+    return np.divide(dots, den, out=np.zeros(dots.shape), where=~(den <= 0))
 
 
 def _fold_norms(a: np.ndarray) -> np.ndarray:

@@ -16,7 +16,6 @@ driver's ``events`` stream shape.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -464,8 +463,9 @@ def incremental_lsh_dedup(
     The index is stamped with what its band hashes depend on — the
     production :data:`~imgfact_spark.operators.dedup.MINHASH_FAMILY_VERSION`,
     ``hash_mode``, ``n``, ``num_hashes`` and the band shape — in
-    ``{work_dir}/index/_family.json`` (a local file, like the table
-    store's markers; Spark's readers skip underscore names).  A run whose
+    ``{work_dir}/index/_family.json``, written through the Hadoop
+    FileSystem like the band files (Spark's readers skip underscore
+    names).  A run whose
     stamp differs, or that finds an index without one, raises before the
     stream starts: hashes from another family match nothing, so reusing
     the index would silently re-admit every historical duplicate.
@@ -478,7 +478,7 @@ def incremental_lsh_dedup(
     )
 
     index_path = f"{work_dir}/index"
-    _stamp_band_index(index_path, {
+    _stamp_band_index(spark, index_path, {
         "family_version": MINHASH_FAMILY_VERSION, "hash_mode": hash_mode,
         "n": n, "num_hashes": num_hashes, "bands": bands,
         "rows_per_band": rows_per_band,
@@ -552,20 +552,32 @@ def incremental_lsh_dedup(
     return q
 
 
-def _stamp_band_index(index_path: str, family: dict) -> None:
+def _stamp_band_index(spark: SparkSession, index_path: str, family: dict) -> None:
     """Stamp a new band index with ``family``, or check an existing one's
-    stamp; raise, naming the rebuild, when it is missing or differs."""
-    marker = os.path.join(index_path, "_family.json")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            stored = json.load(f)
+    stamp; raise, naming the rebuild, when it is missing or differs.  The
+    stamp goes through the Hadoop FileSystem of ``index_path``, so any
+    path or URI Spark writes the index to holds its stamp too."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path
+    index = hpath(index_path)
+    fs = index.getFileSystem(sc._jsc.hadoopConfiguration())
+    marker = hpath(index, "_family.json")
+    if fs.exists(marker):
+        stream = fs.open(marker)
+        try:
+            text = sc._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+        stored = json.loads(text)
         if stored == family:
             return
         found = f"is stamped {stored}"
-    elif not os.path.isdir(index_path) or not os.listdir(index_path):
-        os.makedirs(index_path, exist_ok=True)
-        with open(marker, "w") as f:
-            json.dump(family, f, sort_keys=True)
+    elif not fs.exists(index) or len(fs.listStatus(index)) == 0:
+        out = fs.create(marker, False)
+        try:
+            out.write(json.dumps(family, sort_keys=True).encode())
+        finally:
+            out.close()
         return
     else:
         found = "has no _family.json stamp (written before stamps existed)"

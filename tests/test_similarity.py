@@ -537,33 +537,66 @@ def test_ivf_single_query_single_probe_meets_empty_query_sides(spark):
     members = pd.DataFrame({"vec_id": [1, 2], "embedding": [np.ones(DIM)] * 2})
     probing = pd.DataFrame({"query_id": [7], "_qvec": [np.ones(DIM)]})
     for m, p in ((members, probing.iloc[:0]), (members.iloc[:0], probing)):
-        out = _cell_kernel(m, p, 5, "vec_id", "embedding", "query_id", "pandas")
+        out = _cell_kernel(m, p, 5, "vec_id", "embedding", "query_id")
         assert list(out.columns) == ["query_id", "vec_id", "cosine"] and len(out) == 0
         assert out["vec_id"].dtype == np.int64 and out["cosine"].dtype == np.float64
+    # degenerate members score like the JVM cosine_sim: a NaN vector gives
+    # NaN (Spark's NaN > 0 holds), a zero vector 0.0
+    odd = pd.DataFrame({"vec_id": [1, 2], "embedding": [np.full(DIM, np.nan), np.zeros(DIM)]})
+    out = _cell_kernel(odd, probing, 5, "vec_id", "embedding", "query_id")
+    assert np.isnan(out["cosine"][0]) and out["cosine"][1] == 0.0
 
 
-def test_ivf_cell_kernel_modes_emit_identical_fold_cosines():
-    """The pandas kernel scans with BLAS but emits the sequential folds:
-    on float vectors (where the JVM rounds each product to float, and BLAS
-    over doubles does not) both modes return the same rows with
-    bitwise-equal cosines, pruned or not."""
+def _kernel_frames(n_members, n_queries, dim, seed):
     import pandas as pd
 
+    rng = np.random.RandomState(seed)
+    vecs = rng.standard_normal((n_members, dim)).astype("float32")
+    qv = rng.standard_normal((n_queries, dim)).astype("float32")
+    members = pd.DataFrame({"vec_id": np.arange(n_members), "embedding": list(vecs)})
+    probing = pd.DataFrame({"query_id": np.arange(n_queries), "_qvec": list(qv)})
+    return vecs, qv, members, probing
+
+
+def test_ivf_cell_kernel_prune_is_exact_across_tiles(monkeypatch):
+    """With tiles far smaller than the cell (many member and query tiles),
+    the kernel emits, per query, the rows within the prune slack of its
+    k-th best fold cosine in the WHOLE cell — about k rows, not k per
+    tile — and every dropped row folds more than 1e-6 below that k-th
+    best, so it rounds strictly below k kept rows.  The emitted cosines
+    are bitwise the sequential folds on float vectors (where the JVM
+    rounds each product to float and BLAS over doubles does not)."""
+    from imgfact_spark.operators import similarity
+    from imgfact_spark.operators.similarity import _cell_kernel, _fold_cosines
+
+    k = 10
+    monkeypatch.setattr(similarity, "_SCAN_TILE", 64 * k * 4)  # 4 queries × 640 members
+    vecs, qv, members, probing = _kernel_frames(3000, 30, DIM, seed=9)
+    out = _cell_kernel(members, probing, k, "vec_id", "embedding", "query_id")
+    folds = _fold_cosines(vecs[:, None, :], qv[None, :, :])  # (members, queries)
+    r, c = out["vec_id"].to_numpy(), out["query_id"].to_numpy()
+    assert (out["cosine"].to_numpy() == folds[r, c]).all()
+    kth = np.sort(folds, axis=0)[-k]
+    kept = np.zeros(folds.shape, bool)
+    kept[r, c] = True
+    assert (kept | (folds < kth - 1e-6)).all()
+    assert (kept[folds >= kth]).all()
+    per_query = np.bincount(c, minlength=30)
+    assert per_query.min() >= k and per_query.sum() <= 30 * k + 3
+
+
+def test_ivf_cell_kernel_prunes_many_probing_queries():
+    """A cell probed by so many queries that |queries|·dim exceeds
+    2^22 / k still comes out at about k rows per query: the scan tiles
+    the queries too, so its member tiles stay far wider than k."""
     from imgfact_spark.operators.similarity import _cell_kernel
 
-    rng = np.random.RandomState(9)
-    vecs = rng.standard_normal((300, DIM)).astype("float32")
-    members = pd.DataFrame({"vec_id": np.arange(300), "embedding": list(vecs)})
-    probing = pd.DataFrame({"query_id": np.arange(40), "_qvec": list(vecs[:40])})
-    for k in (300, 10):
-        out = [
-            _cell_kernel(members, probing, k, "vec_id", "embedding", "query_id", m)
-            .sort_values(["query_id", "vec_id"], ignore_index=True)
-            for m in ("column", "pandas")
-        ]
-        if k == 300:
-            assert len(out[0]) == 300 * 40
-        pd.testing.assert_frame_equal(out[0], out[1], check_exact=True)
+    k, n_q, dim = 10, 7000, 64
+    assert n_q * dim > (1 << 22) // k
+    _, _, members, probing = _kernel_frames(300, n_q, dim, seed=5)
+    out = _cell_kernel(members, probing, k, "vec_id", "embedding", "query_id")
+    per_query = np.bincount(out["query_id"].to_numpy(), minlength=n_q)
+    assert per_query.min() >= k and per_query.sum() <= n_q * k * 1.01
 
 
 def test_semantic_dedup_drops_planted_copies(spark):

@@ -407,7 +407,8 @@ def test_incremental_lsh_dedup_refuses_stale_band_index(spark, tmp_path):
     shape.  An index stamped by family v1, one without a stamp (written
     before stamps existed) and a run with another band shape all fail
     fast, naming the rebuild — instead of silently re-admitting every
-    historical duplicate.  A matching stamp runs."""
+    historical duplicate.  A matching stamp runs.  The work directory is
+    given as a file:// URI: the stamp lives where Spark writes the index."""
     import json
 
     import pytest
@@ -416,7 +417,8 @@ def test_incremental_lsh_dedup_refuses_stale_band_index(spark, tmp_path):
     from imgfact_spark.streaming import incremental_lsh_dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    in_dir, work, ckpt = (str(tmp_path / d) for d in ("in", "work", "ckpt"))
+    in_dir, ckpt = (str(tmp_path / d) for d in ("in", "ckpt"))
+    work = (tmp_path / "work").as_uri()
     docs.filter(F.col("doc_id") >= 450).coalesce(1).write.parquet(in_dir)
     kw = dict(n=1, num_hashes=32, bands=4, rows_per_band=8, hash_mode="md5")
 
@@ -424,22 +426,28 @@ def test_incremental_lsh_dedup_refuses_stale_band_index(spark, tmp_path):
         incremental_lsh_dedup(spark, in_dir, work, ckpt, docs.schema, **{**kw, **over})
 
     run()
-    marker = os.path.join(work, "index", "_family.json")
-    with open(marker) as f:
-        stamp = json.load(f)
+    index_dir = tmp_path / "work" / "index"
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "in", "work"]
+    marker = index_dir / "_family.json"
+    stamp = json.loads(marker.read_text())
     assert stamp == {"family_version": MINHASH_FAMILY_VERSION, **kw}
     assert spark.read.parquet(f"{work}/index").count() > 0  # stamp is skipped
 
+    def edit(new_stamp):
+        # a hand edit: drop the Hadoop checksum sidecar along with the stamp
+        (index_dir / "._family.json.crc").unlink(missing_ok=True)
+        marker.unlink(missing_ok=True)
+        if new_stamp is not None:
+            marker.write_text(json.dumps(new_stamp))
+
     with pytest.raises(RuntimeError, match="Rebuild the index"):
         run(bands=8, rows_per_band=4)
-    with open(marker, "w") as f:
-        json.dump({**stamp, "family_version": 1}, f)
+    edit({**stamp, "family_version": 1})
     with pytest.raises(RuntimeError, match="Rebuild the index"):
         run()
-    os.remove(marker)
+    edit(None)
     with pytest.raises(RuntimeError, match="no _family.json stamp"):
         run()
 
-    with open(marker, "w") as f:
-        json.dump(stamp, f)
+    edit(stamp)
     run()  # same family and shape: the stream resumes
